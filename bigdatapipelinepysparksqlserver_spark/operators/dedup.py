@@ -876,97 +876,22 @@ def hamming_neighbors_wide(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Duplicate clusters from a pair list: connected components by
-    iterative min-label propagation. Returns (doc_id, component) where
-    ``component`` is the smallest doc id reachable from ``doc_id`` —
-    i.e. the cluster's canonical representative.
-
-    This is the step that turns pairwise near-dup MATCHES into dedup
-    GROUPS (keep the canonical doc, drop the rest). It is genuinely
-    iterative — no single SQL expression computes transitive closure —
-    so it runs a driver loop of DataFrame rounds:
-
-    label_{t+1}(v) = min(label_t(v), min over neighbors u of label_t(u))
-
-    converging in O(diameter) rounds; near-dup graphs are unions of
-    small dense clusters, so the diameter — and the round count — is
-    tiny regardless of corpus size. Each round is one join + one
-    groupBy on the (small) edge list, with the previous labels
-    localCheckpoint()ed to sever the exponentially deepening lineage
-    (the classic iterative-algorithm failure mode). Convergence is
-    detected by an exact per-round change count; ``max_iter`` bounds
-    pathological chains — if the cap is hit, a chain longer than
-    ``max_iter`` hops keeps more than one label (components OVER-split,
-    never wrongly merged; raise ``max_iter`` or pre-collapse exact dups
-    if corpus graphs ever get that stringy).
-    """
-    sym = edges.select(
-        F.col(id1).alias("src"), F.col(id2).alias("dst")
-    ).unionByName(edges.select(F.col(id2).alias("src"), F.col(id1).alias("dst")))
-    sym = sym.persist()
-    labels, free_prev = tracked_local_checkpoint(
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["dst"] == labels["doc_id"])
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated, free_new = tracked_local_checkpoint(
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_min"), F.col("component")) < F.col("component"))
-                .cast("long")
-                .alias("__changed"),
-            )
-        )  # sever lineage: O(1) plan depth per round
-        changed = updated.agg(F.sum("__changed")).first()[0] or 0
-        # round materialized (the checkpoint is eager) → free the
-        # previous round's blocks now instead of stranding one per round
-        free_prev()
-        free_prev = free_new
-        labels = updated.drop("__changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    # the returned plan projects the FINAL checkpoint — its free handle
-    # joins the caching scope (a freed checkpoint is unexecutable, so
-    # the harness releases it only after materialization)
-    scoped_release(free_prev)
-    return labels
-
-
 def connected_components_star(
     edges: DataFrame,
     id1: str = "id1",
     id2: str = "id2",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    rewriting (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14). Returns (doc_id, component) like
-    :func:`connected_components`, with component = the cluster minimum.
+    """Duplicate clusters from a pair list: connected components by
+    alternating large-star / small-star edge rewriting (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). Returns
+    (doc_id, component) where ``component`` is the smallest doc id
+    reachable from ``doc_id`` — the cluster's canonical representative.
 
-    Why a second algorithm: min-label propagation needs O(diameter)
-    rounds — fine for near-dup graphs (unions of small dense cliques),
-    pathological for stringy graphs (a length-L chain takes L rounds,
-    each a full shuffle). Star contraction halves tree heights every
-    round and provably converges in O(log² n) rounds (O(log n) in
-    practice) *independent of diameter* — the right default at 100 TB
-    where one adversarial chain would otherwise serialize the job.
+    Min-label propagation would need O(diameter) rounds, each a full
+    shuffle, so one stringy chain would serialize the job. Star
+    contraction halves tree heights every round and converges in
+    O(log² n) rounds (O(log n) in practice) *independent of diameter*.
 
     Each round is two groupBy+join passes over the edge list, no
     collect_list (high-degree nodes never materialize their
@@ -980,27 +905,16 @@ def connected_components_star(
     Both preserve connectivity and strictly shrink a potential
     function, so the fixed point — star graphs rooted at each
     component's minimum — is reached without oscillation. Convergence
-    is detected by the STAR-FOREST test itself (r11): the edge set is
-    a fixed point iff no ``lo`` endpoint also appears as a ``hi`` (all
-    (hi, lo) rows keep hi > lo, so a component whose lo-set and hi-set
-    are disjoint is exactly a star rooted at its minimum — the fixed
-    point the rounds provably reach). The test is one map-side-
-    combinable aggregate over the round's checkpointed output (union
-    both endpoint roles, group by node, nonempty both-roles set ⇒ not
-    yet a star), so it replaces the old (edge-count, hash-sum)
-    fingerprint — which could only detect a fixed point by running one
-    EXTRA full round and comparing — and the loop now stops one round
-    (≈ 6 exchanges over the edge list) earlier, with the same exact
-    output. Checked BEFORE each round too, so an already-contracted
-    input (all-pair-components near-dup boards) skips the loop
-    entirely. Per-round localCheckpoint severs lineage;
-    each round EAGERLY materializes its checkpoint and then frees the
-    previous round's blocks (r5 — the loop used to strand one
-    edge-list-sized checkpoint per round until GC noticed). The inputs
-    the FINAL lazy plan still references (base edges, node list, last
-    round) are registered in the caching scope, released by the harness
-    after materialization — unpersisting them here would strand the
-    returned plan on lineage a localCheckpoint no longer has.
+    is detected by the star-forest test itself (``_is_star_forest``),
+    one map-side-combinable aggregate over the round's checkpointed
+    output, checked before each round too, so an already-contracted
+    input skips the loop entirely. Per-round localCheckpoint severs
+    lineage; each round eagerly materializes its checkpoint and then
+    frees the previous round's blocks. The inputs the FINAL lazy plan
+    still references (base edges, node list, last round) are
+    registered in the caching scope, released by the harness after
+    materialization — unpersisting them here would strand the returned
+    plan on lineage a localCheckpoint no longer has.
     """
     deduped = scoped_local_checkpoint(
         edges.select(

@@ -1,5 +1,5 @@
-"""Batched-store compaction — the store analogue of the lake's
-small-file `compact_partitions` hook (sources/lake.py).
+"""Batched-store compaction: merges the per-batch partition levels of
+the growing stores back into one.
 
 The two growing stores (`postings_store_append_batch` in
 operators/retrieval.py and `ivf_store_append_batch` in

@@ -11,8 +11,10 @@ current_cutoff) — the boundary semantics that make CDC exactly-once
    deletes  (tombstone deleted_date in window, from `removed`)
 2. re-extract ONLY those partitions from the source, denormalized
    through the dim joins (J1)
-3. dynamic-partition-overwrite them into the lake (M6) — rebuild
-   naturally omits deleted rows (tombstones need no replay)
+3. hand the extract to the lake's ``apply_rebuild`` (M6): it replaces
+   the changed partitions and drops any under a changed year_month the
+   extract no longer produces — rebuild naturally omits deleted rows
+   (tombstones need no replay)
 
 Known, intentional semantics (README.md:76 / SURVEY §7.5 risk 6):
 a record BACKDATED to before previous_cutoff whose row was inserted
@@ -47,22 +49,12 @@ class IncrementalLoader:
         products: DataFrame,
         removed: DataFrame,
         lake: LakeTable,
-        compact_target_bytes: int | None = None,
     ):
         self.sales = sales
         self.clients = clients
         self.products = products
         self.removed = removed
         self.lake = lake
-        # optional post-rebuild compaction of JUST-TOUCHED partitions: a
-        # 15-min-cadence CDC pipeline (reference sales_pipeline_dag.py:5)
-        # accretes one small file set per cycle per changed partition —
-        # the fragmentation the reference explicitly designed against
-        # (README.md:62). With a target set, every run() ends by
-        # repairing the partitions it rewrote (cost ∝ change set via
-        # only_under; healthy partitions untouched, so steady-state runs
-        # compact nothing).
-        self.compact_target_bytes = compact_target_bytes
 
     # -- step 1: work list -------------------------------------------------
 
@@ -123,52 +115,12 @@ class IncrementalLoader:
     def run(
         self, previous_cutoff: datetime | None, current_cutoff: datetime
     ) -> list[int]:
-        """Full incremental load; returns the rebuilt partition list.
-
-        Delete-to-empty cleanup: dynamic overwrite can only REPLACE
-        partitions present in the extract — a changed partition whose
-        rows were ALL deleted in this window produces no extract rows and
-        would silently keep its stale lake data forever. So after the
-        overwrite, any lake (year_month, country) partition under a
-        changed year_month that the extract no longer contains is dropped
-        explicitly. Both partition listings are partition-value scans
-        (tiny collects), bounded by the change set.
-        """
+        """Full incremental load; returns the rebuilt partition list. The
+        lake's ``apply_rebuild`` owns the partition replacement and the
+        delete-to-empty cleanup."""
         parts = self.changed_partition_list(previous_cutoff, current_cutoff)
         if not parts:
             return []
         extract = self.extract_partitions(parts, current_cutoff)
-        if hasattr(self.lake, "apply_rebuild"):
-            # SnapshotLakeTable: the whole rebuild — changed-partition
-            # replace AND delete-to-empty cleanup — is one manifest swap
-            # (a single visibility event for concurrent readers), and
-            # the kept/stale diff job below is unnecessary: entries
-            # under a changed year_month the extract no longer produces
-            # simply drop out of the next manifest. Post-rebuild
-            # compaction is moot too — every live partition is wholly
-            # owned by the txn that last rebuilt it, so cross-run
-            # fragmentation cannot occur.
-            self.lake.apply_rebuild(extract, changed_year_months=parts)
-            return parts
-        pcols = list(self.lake.partition_cols)
-        kept = {
-            tuple(r[c] for c in pcols)
-            for r in extract.select(*pcols).distinct().collect()
-        }
-        self.lake.overwrite_partitions(extract)
-        if self.lake.exists():
-            existing = {
-                tuple(r[c] for c in pcols)
-                for r in self.lake.partitions()
-                .where(F.col("year_month").isin(parts))
-                .collect()
-            }
-            stale = sorted(existing - kept)
-            if stale:
-                self.lake.drop_partition_values(stale)
-        if self.compact_target_bytes is not None and self.lake.exists():
-            self.lake.compact_partitions(
-                target_file_bytes=self.compact_target_bytes,
-                only_under=[f"year_month={p}" for p in parts],
-            )
+        self.lake.apply_rebuild(extract, changed_year_months=parts)
         return parts

@@ -20,9 +20,9 @@ re-aggregate everything. This module maintains the marts in two levels:
    megabytes where the lake is terabytes.
 
 ``refresh(changed)`` recomputes only the partials of partitions the CDC
-loader just rebuilt (partition-pruned lake scan), dynamic-overwrites
-them, and drops partials of partitions that vanished (delete-to-empty,
-same cleanup contract as ``plans.incremental``). Refresh cost is
+loader just rebuilt (partition-pruned lake scan) and hands each to the
+partial's ``LakeTable.apply_rebuild`` — the same replace-and-drop call
+the CDC loader makes on the lake. Refresh cost is
 ∝ change set; the full-scan path remains available as the bootstrap /
 repair / validation twin (``pipelines.mart_*_df``).
 """
@@ -34,7 +34,6 @@ from datetime import datetime
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType,
     DecimalType,
     IntegerType,
     LongType,
@@ -69,15 +68,6 @@ CLIENT_PAIRS_PARTIAL = StructType(
     ]
 )
 
-CLIENT_SKETCH_PARTIAL = StructType(
-    [
-        StructField("country", StringType()),
-        StructField("gender", StringType()),
-        StructField("sk", BinaryType()),
-        StructField("year_month", IntegerType()),
-    ]
-)
-
 
 class IncrementalMart:
     """Maintains both mart partial tables under ``root`` and serves the
@@ -98,12 +88,6 @@ class IncrementalMart:
             partition_cols=("year_month",),
             schema=CLIENT_PAIRS_PARTIAL,
         )
-        self.client_sketch_partial = LakeTable(
-            spark,
-            f"{root}/client_sketch_partial",
-            partition_cols=("year_month",),
-            schema=CLIENT_SKETCH_PARTIAL,
-        )
 
     # -- partial maintenance ----------------------------------------------
 
@@ -117,10 +101,10 @@ class IncrementalMart:
     def refresh(self, changed: list[int]) -> None:
         """Recompute the partials of ``changed`` year_months only.
 
-        Idempotent (C4): dynamic overwrite rewrites each changed
-        partition to a pure function of the lake's current content, so
-        replays converge. Partitions with no surviving paid rows are
-        dropped from the partials (dynamic overwrite cannot clean them).
+        Idempotent (C4): each changed partition is rewritten to a pure
+        function of the lake's current content, so replays converge.
+        Partitions with no surviving paid rows are dropped from the
+        partials.
         """
         if not changed:
             return
@@ -136,25 +120,8 @@ class IncrementalMart:
         pairs = rows.select(
             "country", "gender", "client_id", "year_month"
         ).distinct()
-        sketches = (
-            rows.groupBy("year_month", "country", "gender")
-            .agg(F.hll_sketch_agg("client_id").alias("sk"))
-            .select([f.name for f in CLIENT_SKETCH_PARTIAL.fields])
-        )
-
-        for partial, fresh in (
-            (self.sales_partial, sales),
-            (self.client_partial, pairs),
-            (self.client_sketch_partial, sketches),
-        ):
-            kept = {
-                r.year_month
-                for r in fresh.select("year_month").distinct().collect()
-            }
-            partial.overwrite_partitions(fresh)
-            stale = [(ym,) for ym in changed if ym not in kept]
-            if stale and partial.exists():
-                partial.drop_partition_values(stale)
+        self.sales_partial.apply_rebuild(sales, changed)
+        self.client_partial.apply_rebuild(pairs, changed)
 
     # -- final marts (small aggregates over partials) ---------------------
 
@@ -192,39 +159,6 @@ class IncrementalMart:
                 F.sum("paid_amount").cast(DecimalType(28, 2)).alias("paid_amount"),
             )
             .withColumn("refresh_date", F.lit(refresh))
-        )
-
-    def client_count_sketched(self, refresh: datetime) -> DataFrame:
-        """Approximate twin of :meth:`client_count` via RE-AGGREGATABLE
-        HLL sketches (Datasketches ``hll_sketch_agg`` / ``hll_union_agg``).
-
-        Scale trade-off: the exact path's partial is the distinct client
-        TUPLES per partition — worst case O(clients) rows per partition.
-        The sketch partial (maintained by ``refresh`` alongside the exact
-        tables) is a fixed ~KB binary per (partition, group) regardless
-        of client count, and sketches MERGE exactly (unlike plain
-        approx_count_distinct numbers, which cannot be re-summed without
-        double-counting clients active in several partitions).
-        ±~2% error at the default lgConfigK=12; the mart's reconciliation
-        contract stays on the exact path — this is the
-        dashboard/estimation tier.
-        """
-        return (
-            self.client_sketch_partial.read()
-            .groupBy("country", "gender")
-            .agg(
-                F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(
-                    "client_count_approx"
-                )
-            )
-            .select(
-                "country",
-                decode_map("gender", {"M": "Male", "F": "Female"}, "Other").alias(
-                    "gender"
-                ),
-                "client_count_approx",
-                F.lit(refresh).alias("refresh_date"),
-            )
         )
 
     def bootstrap(self) -> None:

@@ -220,13 +220,7 @@ class RowLevelMart:
         fresh = merged.where(F.col(counters[0]) > 0).select(
             [f.name for f in partial.schema.fields]
         )
-        kept = {
-            r.year_month for r in fresh.select("year_month").distinct().collect()
-        }
-        partial.overwrite_partitions(fresh)
-        stale = [(ym,) for ym in touched if ym not in kept]
-        if stale:
-            partial.drop_partition_values(stale)
+        partial.apply_rebuild(fresh, changed_year_months=touched)
 
     def refresh_to(self, to_mid: int | None = None) -> list[int]:
         """Fold the change feed from the applied snapshot up to

@@ -14,8 +14,8 @@ Scale notes:
 - dynamic overwrite touches exactly the changed partitions — rebuild cost
   is proportional to the CHANGE SET, never the table (the whole point of
   partition-grain CDC at 100 TB).
-- writes coalesce to a bounded file count per partition to avoid the
-  small-files problem the reference calls out (README.md:62).
+- every write leaves one file per partition, avoiding the small-files
+  problem the reference calls out (README.md:62).
 """
 
 from __future__ import annotations
@@ -98,30 +98,40 @@ class LakeTable:
             return
         self._writer(df).mode("overwrite").parquet(self.path)
 
-    def drop_partitions(self, values: Sequence[int | str], key: str | None = None) -> None:
-        """S5 — explicit partition drop (ALTER TABLE ... DROP PARTITION).
+    def apply_rebuild(self, df: DataFrame, changed_year_months: Sequence) -> None:
+        """One CDC rebuild (the drop + insert of
+        load_sales_history.py:168-177): replace the partitions ``df``
+        produces, then drop every partition under a changed leading key
+        (``changed_year_months``) that ``df`` no longer produces.
 
-        Rarely needed (overwrite_partitions subsumes rebuilds); exists for
-        retention/cleanup semantics. Implemented as metadata-only directory
-        removal on the first-level partition key.
-        """
-        key = key or self.partition_cols[0]
-        if key != self.partition_cols[0]:
-            raise ValueError(f"can only drop on leading partition key {self.partition_cols[0]!r}")
-        import shutil
-
-        for v in values:
-            d = os.path.join(self.path, f"{key}={v}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+        The drop is the delete-to-empty cleanup: dynamic overwrite can
+        only REPLACE partitions present in ``df``, so a changed partition
+        whose rows were all deleted would otherwise keep its stale data.
+        Both partition listings are tiny collects bounded by the change
+        set; a table partitioned by the leading key alone needs no lake
+        listing, its candidates being the changed keys themselves."""
+        pcols = self.partition_cols
+        kept = {tuple(r) for r in df.select(*pcols).distinct().collect()}
+        self.overwrite_partitions(df)
+        if not self.exists():
+            return
+        if len(pcols) == 1:
+            candidates = {(v,) for v in changed_year_months}
+        else:
+            candidates = {
+                tuple(r)
+                for r in self.partitions()
+                .where(F.col(pcols[0]).isin(list(changed_year_months)))
+                .collect()
+            }
+        stale = sorted(candidates - kept)
+        if stale:
+            self.drop_partition_values(stale)
 
     def drop_partition_values(self, rows: Sequence[Sequence]) -> None:
         """Drop fully-qualified partitions, one (value per partition col,
-        in ``partition_cols`` order) tuple each — the cleanup path for
-        partitions whose content disappeared entirely (dynamic overwrite
-        can only REPLACE partitions present in the incoming frame; an
-        all-rows-deleted partition is present in nothing and needs an
-        explicit drop)."""
+        in ``partition_cols`` order) tuple each — the delete-to-empty
+        cleanup path of :meth:`apply_rebuild`. Missing partitions no-op."""
         import shutil
 
         root = os.path.abspath(self.path)
@@ -142,115 +152,6 @@ class LakeTable:
             while parent != root and os.path.isdir(parent) and not os.listdir(parent):
                 os.rmdir(parent)
                 parent = os.path.dirname(parent)
-
-    def partition_file_stats(
-        self, only_under: Sequence[str] | None = None
-    ) -> list[tuple[str, int, int]]:
-        """Per-partition (relative_dir, file_count, total_bytes) from
-        filesystem metadata only — no data scan. The observability half
-        of compaction: a 100 TB lake's scan cost is driven by file count
-        as much as byte count (per-file open/footer overhead, task
-        scheduling), so fragmentation must be measurable cheaply.
-
-        ``only_under`` restricts the walk to the given partition-dir
-        prefixes (e.g. ``["year_month=202406"]``) — the change-set-bounded
-        form the post-CDC compaction hook uses: listing cost then scales
-        with the partitions just touched, never the table.
-        """
-        root = os.path.abspath(self.path)
-        roots = (
-            [root]
-            if only_under is None
-            else [os.path.join(root, rel) for rel in only_under]
-        )
-        stats: list[tuple[str, int, int]] = []
-        for walk_root in roots:
-            for dirpath, _dirnames, filenames in os.walk(walk_root):
-                data = [
-                    n
-                    for n in filenames
-                    if n.endswith(".parquet") and not n.startswith(("_", "."))
-                ]
-                if not data:
-                    continue
-                nbytes = sum(
-                    os.path.getsize(os.path.join(dirpath, n)) for n in data
-                )
-                stats.append((os.path.relpath(dirpath, root), len(data), nbytes))
-        return stats
-
-    def compact_partitions(
-        self,
-        target_file_bytes: int = 128 << 20,
-        min_files: int = 2,
-        only_under: Sequence[str] | None = None,
-    ) -> list[str]:
-        """File-layout repair: rewrite exactly the partitions whose file
-        count is wrong for their byte size — MERGE when fragmented
-        (> ceil(bytes/target) files and ≥ ``min_files``), SPLIT when
-        files are oversized (< ceil(bytes/target) files, i.e. average
-        file > target). Healthy partitions' files are left physically
-        untouched. Returns the rewritten partition dirs.
-
-        Continuous ingest (streaming foreachBatch, frequent small CDC
-        runs) fragments partitions — per-file open/footer overhead and
-        task-scheduling cost then dominate scans; conversely a giant
-        single file caps scan parallelism at 1 task per
-        maxPartitionBytes range but still pays row-group skew. At scale
-        the fix must be (a) incremental — cost ∝ unhealthy partitions,
-        never the table — and (b) idempotent/atomic per partition,
-        which dynamic partition overwrite gives for free. Each
-        rewritten partition comes back as ceil(bytes/target) files via
-        a salted repartition.
-
-        ``only_under`` bounds BOTH the stats listing and the candidate
-        set to the given partition-dir prefixes — the post-CDC hook
-        passes the just-rebuilt ``year_month=…`` dirs so a
-        15-min-cadence pipeline pays compaction cost ∝ its change set.
-        """
-        todo: list[tuple[str, int]] = []
-        for rel, nfiles, nbytes in self.partition_file_stats(only_under=only_under):
-            want = max(1, -(-nbytes // target_file_bytes))
-            fragmented = nfiles >= min_files and nfiles > want
-            oversized = nfiles < want
-            if fragmented or oversized:
-                todo.append((rel, want))
-        if not todo:
-            return []
-        mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        if (mode or "").lower() != "dynamic":
-            raise RuntimeError(
-                "partitionOverwriteMode must be 'dynamic' for compaction "
-                f"(got {mode!r}); static mode would drop healthy partitions"
-            )
-        # match partitions by their dir path rendered from the data —
-        # identical formatting to what the writer produced the dirs from
-        rel_expr = F.concat_ws(
-            "/",
-            *[
-                F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-                for c in self.partition_cols
-            ],
-        )
-        # the common case — fragmented partitions merging to 1 file each —
-        # is ONE keyed-repartition job regardless of how many partitions
-        # qualify (cost bounded by one shuffle of the fragmented data).
-        # Splits are rarer and need an exact file count, which only an
-        # explicit repartition(n) gives (AQE coalesces keyed shuffles of
-        # small data back into one task, silently undoing a salt), so
-        # each oversized partition is its own round-robin rewrite.
-        merge_rels = [rel for rel, want in todo if want == 1]
-        if merge_rels:
-            frag = self.read().where(rel_expr.isin(merge_rels))
-            self._writer(frag).mode("overwrite").parquet(self.path)
-        for rel, want in todo:
-            if want == 1:
-                continue
-            part = self.read().where(rel_expr == rel).repartition(want)
-            part.write.partitionBy(*self.partition_cols).mode("overwrite").parquet(
-                self.path
-            )
-        return [rel for rel, _ in todo]
 
     def register_catalog_table(self, name: str) -> None:
         """S4 — catalog DDL: CREATE TABLE IF NOT EXISTS ... USING PARQUET
@@ -277,9 +178,8 @@ class LakeTable:
     def _writer(self, df: DataFrame):
         # hash-repartition on the partition keys: every row of one lake
         # partition lands in one shuffle task → exactly one file per
-        # partition (small-files avoidance, README.md:62). A partition
-        # too big for one file is compact_partitions' split path, which
-        # uses an explicit round-robin repartition instead.
+        # partition (small-files avoidance, README.md:62), so a rebuild
+        # never fragments a partition across runs.
         ordered = df.select(
             *[c for c in df.columns if c not in self.partition_cols],
             *self.partition_cols,

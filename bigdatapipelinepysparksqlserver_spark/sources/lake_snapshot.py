@@ -53,8 +53,8 @@ Scale notes (100 TB):
   partition to a bounded file set on every rebuild.
 - fragmentation-across-runs cannot occur by construction: a partition
   is wholly owned by the single txn that last rebuilt it (the hash
-  repartition in the writer yields one file per partition), so the
-  LakeTable.compact_partitions repair loop has nothing to do here.
+  repartition in the writer yields one file per partition), so no
+  compaction pass is needed.
 - GC reaps manifests behind the retain window and any data partition
   directory no retained manifest references; ``retain`` bounds how
   long an in-flight reader's snapshot stays valid, identical to the
@@ -1258,9 +1258,10 @@ class SnapshotLakeTable:
         partitions to a fresh txn and swap in a manifest where every
         prior entry under ``changed_year_months`` is replaced by (or,
         if the extract no longer produces it, dropped with) the new
-        txn's partitions. Subsumes the plain lake's overwrite +
-        stale-partition-drop two-step — and removes the extra
-        distinct-partitions Spark job the two-step needed."""
+        txn's partitions. Same contract as
+        :meth:`~.lake.LakeTable.apply_rebuild`, whose overwrite +
+        stale-partition drop it folds into one manifest swap with no
+        partition-listing Spark job."""
         return self._publish(
             df,
             replace_all=False,

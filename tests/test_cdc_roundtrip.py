@@ -297,15 +297,16 @@ def test_retries_exhausted_reraises_and_single_flight_not_retried(spark, env, mo
 
 
 @pytest.mark.slow
-def test_compaction_hook_bounds_file_counts_across_cycles(spark, env):
-    """The optional post-rebuild compaction hook (VERDICT r5 #7): a
-    15-min-cadence pipeline accretes small files per cycle — with
-    compact_target_bytes set, every run() ends by repairing exactly the
-    partitions it touched, so per-partition file counts stay bounded
-    across N cycles instead of growing with run count."""
+def test_rebuild_keeps_one_file_per_partition_across_cycles(spark, env):
+    """A 15-min-cadence pipeline rebuilds the same few partitions every
+    cycle; the writer's hash repartition on the partition keys must keep
+    each partition at exactly one data file across cycles instead of
+    accreting a file per run."""
+    import glob
+
     src, gen, lake, ledger = env
     gen.insert_sales(120, batch=1, now=T1, spread_days=3)
-    run_pipeline_1(spark, src, lake, ledger, now=T1, compact_target_bytes=64 << 20)
+    run_pipeline_1(spark, src, lake, ledger, now=T1)
 
     # 5 more daily cycles, each inserting into the SAME few partitions
     # (sale_date = stamp − U(0, 1 day), inside every cycle's window)
@@ -313,43 +314,11 @@ def test_compaction_hook_bounds_file_counts_across_cycles(spark, env):
     for cycle in range(2, 7):
         t = t + timedelta(days=1)
         gen.insert_sales(40, batch=cycle, now=t - timedelta(hours=1), spread_days=1)
-        rep = run_pipeline_1(
-            spark, src, lake, ledger, now=t, compact_target_bytes=64 << 20
-        )
+        rep = run_pipeline_1(spark, src, lake, ledger, now=t)
         assert rep["validation"].status == SUCCESSFUL
         assert rep["rebuilt_partitions"]
 
-    # every partition merged back to the single file its byte size wants
-    stats = lake.partition_file_stats()
-    assert stats
-    for rel, nfiles, nbytes in stats:
-        assert nfiles == 1, (rel, nfiles, nbytes)
-
-
-@pytest.mark.slow
-def test_compaction_hook_scopes_to_touched_partitions(spark, env, monkeypatch):
-    """Cost ∝ change set: the hook must pass only the just-rebuilt
-    year_month dirs to compact_partitions (a lake-wide walk per cycle
-    would defeat the point at 100 TB)."""
-    from bigdatapipelinepysparksqlserver_spark.sources.lake import LakeTable
-
-    src, gen, lake, ledger = env
-    gen.insert_sales(100, batch=1, now=T1, spread_days=40)
-    run_pipeline_1(spark, src, lake, ledger, now=T1)
-
-    seen = []
-    real = LakeTable.compact_partitions
-
-    def spy(self, *a, **kw):
-        seen.append(kw.get("only_under"))
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(LakeTable, "compact_partitions", spy)
-    gen.insert_sales(30, batch=2, now=T2 - timedelta(hours=1), spread_days=1)
-    rep = run_pipeline_1(
-        spark, src, lake, ledger, now=T2, compact_target_bytes=64 << 20
-    )
-    assert seen and seen[0] is not None
-    assert sorted(seen[0]) == sorted(
-        f"year_month={p}" for p in rep["rebuilt_partitions"]
-    )
+    part_dirs = glob.glob(f"{lake.path}/year_month=*/country=*")
+    assert part_dirs
+    for d in part_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d

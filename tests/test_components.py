@@ -1,6 +1,6 @@
 """Connected components (duplicate clustering): hand-built graphs plus a
-property test against a brute-force union-find reference — run against
-BOTH implementations (min-label propagation and large/small-star)."""
+property test of the large/small-star contraction against a brute-force
+union-find reference."""
 
 from __future__ import annotations
 
@@ -8,11 +8,10 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from bigdatapipelinepysparksqlserver_spark.operators.dedup import (
-    connected_components,
     connected_components_star,
 )
 
-ALGOS = [connected_components, connected_components_star]
+ALGOS = [connected_components_star]
 
 
 def _components_bruteforce(edges):
@@ -32,7 +31,7 @@ def _components_bruteforce(edges):
     return {v: find(v) for v in parent}
 
 
-@pytest.mark.parametrize("algo", ALGOS, ids=["label", "star"])
+@pytest.mark.parametrize("algo", ALGOS, ids=["star"])
 def test_chain_and_islands(spark, algo):
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
     got = {
@@ -42,11 +41,10 @@ def test_chain_and_islands(spark, algo):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-@pytest.mark.parametrize("algo", ALGOS, ids=["label", "star"])
+@pytest.mark.parametrize("algo", ALGOS, ids=["star"])
 def test_long_chain_converges(spark, algo):
-    # a path graph has maximal diameter for its size — worst case for
-    # min-label propagation round count, and the case star contraction
-    # exists to collapse in O(log n) rounds
+    # a path graph has maximal diameter for its size — the case star
+    # contraction exists to collapse in O(log n) rounds
     n = 12
     edges = [(i, i + 1) for i in range(n)]
     got = {

@@ -41,8 +41,51 @@ def test_partitions_listing_and_drop(spark, tmp_path):
     lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "PT")]))
     parts = {(r.year_month, r.country) for r in lake.partitions().collect()}
     assert parts == {(202401, "PT"), (202402, "PT")}
-    lake.drop_partitions([202401])
+    lake.drop_partition_values([(202401, "PT")])
     assert {r.year_month for r in lake.read().collect()} == {202402}
+    # the emptied year_month shell is pruned too
+    assert not (tmp_path / "lake" / "year_month=202401").exists()
+
+
+@pytest.mark.parametrize(
+    "pcols", [("year_month", "country"), ("year_month",)], ids=["two_level", "one_level"]
+)
+def test_apply_rebuild_drops_vanished_and_keeps_unchanged(spark, tmp_path, pcols):
+    """apply_rebuild replaces what the frame produces under the changed
+    year_months, drops what it no longer produces there, and leaves the
+    files of every unchanged year_month physically untouched."""
+    root = str(tmp_path / "lake")
+    lake = LakeTable(spark, root, partition_cols=pcols)
+    two = len(pcols) == 2
+
+    def df(rows):
+        return spark.createDataFrame(
+            [r if two else r[:3] for r in rows], ["id", "v", *pcols]
+        )
+
+    def unchanged_files():
+        """{path: mtime} of every data file under the unchanged 202403."""
+        return {
+            os.path.join(d, n): os.path.getmtime(os.path.join(d, n))
+            for d, _dirs, files in os.walk(os.path.join(root, "year_month=202403"))
+            for n in files
+            if n.endswith(".parquet")
+        }
+
+    lake.write_full(
+        df([(1, "a", 202401, "PT"), (2, "b", 202401, "ES"),
+            (3, "c", 202402, "PT"), (4, "d", 202403, "PT")])
+    )
+    before = unchanged_files()
+    # 202401 keeps only its PT row; 202402 lost every row; 202403 unchanged
+    lake.apply_rebuild(df([(9, "z", 202401, "PT")]), changed_year_months=[202401, 202402])
+
+    got = {tuple(r[c] for c in ["id", *pcols]) for r in lake.read().collect()}
+    assert got == ({(9, 202401, "PT"), (4, 202403, "PT")} if two else {(9, 202401), (4, 202403)})
+    assert not os.path.exists(os.path.join(root, "year_month=202402"))
+    if two:
+        assert not os.path.exists(os.path.join(root, "year_month=202401", "country=ES"))
+    assert before and unchanged_files() == before
 
 
 def test_one_file_per_partition(spark, tmp_path):
@@ -83,73 +126,6 @@ def test_register_catalog_table(spark, tmp_path):
         lake.register_catalog_table("sales_history_cat_test")
     finally:
         spark.sql("DROP TABLE IF EXISTS sales_history_cat_test")
-
-
-def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
-    """Compaction: fragmented partition collapses to 1 file with identical
-    content; a healthy partition's files are left physically untouched."""
-    import glob
-    import os
-
-    lake = LakeTable(spark, str(tmp_path / "lake"))
-    lake.write_full(_df(spark, [(1, "a", 202401, "PT"), (2, "b", 202402, "PT")]))
-    # simulate streaming/CDC appends fragmenting (202401, PT): three
-    # appended files alongside the original
-    for i in range(3):
-        (
-            _df(spark, [(10 + i, "frag", 202401, "PT")])
-            .coalesce(1)
-            .write.mode("append")
-            .partitionBy("year_month", "country")
-            .parquet(str(tmp_path / "lake"))
-        )
-    frag_dir = str(tmp_path / "lake" / "year_month=202401" / "country=PT")
-    healthy_dir = str(tmp_path / "lake" / "year_month=202402" / "country=PT")
-    assert len(glob.glob(frag_dir + "/*.parquet")) == 4
-    healthy_before = {
-        (f, os.path.getmtime(f)) for f in glob.glob(healthy_dir + "/*.parquet")
-    }
-    before = {tuple(r) for r in lake.read().collect()}
-
-    stats = {rel: (n, b) for rel, n, b in lake.partition_file_stats()}
-    assert stats["year_month=202401/country=PT"][0] == 4
-
-    rewritten = lake.compact_partitions(min_files=2)
-    assert rewritten == ["year_month=202401/country=PT"]
-    assert len(glob.glob(frag_dir + "/*.parquet")) == 1
-    # data identical, healthy partition files untouched (same inodes/mtimes)
-    assert {tuple(r) for r in lake.read().collect()} == before
-    healthy_after = {
-        (f, os.path.getmtime(f)) for f in glob.glob(healthy_dir + "/*.parquet")
-    }
-    assert healthy_after == healthy_before
-    # second run: nothing left to do
-    assert lake.compact_partitions(min_files=2) == []
-
-
-def test_compaction_splits_oversized_partition(spark, tmp_path):
-    """The split path: a partition whose bytes exceed the target file size
-    comes back as ceil(bytes/target) files, not one."""
-    import glob
-
-    lake = LakeTable(spark, str(tmp_path / "lake"))
-    rows = [(i, "x" * 50, 202401, "PT") for i in range(2000)]
-    lake.write_full(_df(spark, rows))
-    # fragment it so compaction triggers
-    _df(spark, [(99999, "y", 202401, "PT")]).coalesce(1).write.mode(
-        "append"
-    ).partitionBy("year_month", "country").parquet(str(tmp_path / "lake"))
-    before = {tuple(r) for r in lake.read().collect()}
-
-    [(rel, nfiles, nbytes)] = lake.partition_file_stats()
-    target = nbytes // 3  # force want ≈ 3-4 files
-    assert lake.compact_partitions(target_file_bytes=target, min_files=2) == [rel]
-    d = str(tmp_path / "lake" / "year_month=202401" / "country=PT")
-    got_files = len(glob.glob(d + "/*.parquet"))
-    want = -(-nbytes // target)
-    # salted split: expect >1 file, bounded by the requested count
-    assert 1 < got_files <= want
-    assert {tuple(r) for r in lake.read().collect()} == before
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):
