@@ -10,12 +10,12 @@ Reproduces the reference's exactly-once-with-restart protocol
 5. UPDATE validation_* on reconcile                                  (M2)
 6. previous_cutoff = current_cutoff of run (id-1)                    (S11)
 
-Storage is a single small parquet "control table". The ledger is tiny
-(one row per pipeline run) and driver-local by nature — the reference
-keeps it in SQL Server; we keep it lake-native. Every mutation is a
-read-modify-overwrite of the whole table, which at ledger cardinality
-(thousands of rows) is exact and cheap; a JDBC-backed ledger would
-swap the storage layer only.
+The protocol is written once, in ``RunLedger``, over ``rows()`` and three
+storage primitives (``_delete_from``, ``_insert``, ``_update``). The ledger
+is tiny (one row per run), so ``RunLedger`` keeps it as one JSON document
+(ISO-8601 timestamps) replaced through ``LocalFS.set_pointer``: each
+transition is one atomic replace, a crash leaves the old or the new
+ledger, and no Spark job runs. ``JdbcRunLedger`` swaps in per-row SQL.
 
 All timestamps are injected (``clock`` callables) — SURVEY §7.5 risk 3:
 `datetime.now()` at 6+ reference sites makes runs unreproducible; the
@@ -24,18 +24,21 @@ engine takes the clock as a parameter for deterministic tests.
 
 from __future__ import annotations
 
-import os
-import shutil
+import json
 from datetime import datetime, timedelta
 
 from pyspark.sql import Row, SparkSession
+from pyspark.sql.types import TimestampType
 
 from ..schemas import LEDGER
+from ..sources.fs import LocalFS
 
 RUNNING = "RUNNING"
 SUCCESSFUL = "SUCCESSFUL"
 FAILED = "FAILED"
 NOT_STARTED = "NOT STARTED"
+
+_TIMESTAMPS = {f.name for f in LEDGER.fields if isinstance(f.dataType, TimestampType)}
 
 
 def default_cutoff(now: datetime, lag_minutes: int = 5) -> datetime:
@@ -55,17 +58,23 @@ class RunLedger:
 
     # -- reads ------------------------------------------------------------
 
+    def rows(self) -> list[Row]:
+        """Ledger rows in run order; a missing ledger reads as empty."""
+        doc = LocalFS().read_pointer(self.path) or "[]"
+        return [
+            Row(**{k: datetime.fromisoformat(d[k]) if k in _TIMESTAMPS and d[k] else d[k]
+                   for k in LEDGER.names})
+            for d in json.loads(doc)
+        ]
+
     def read(self):
-        if not os.path.isdir(self.path):
-            return self.spark.createDataFrame([], LEDGER)
-        return self.spark.read.schema(LEDGER).parquet(self.path)
+        return self.spark.createDataFrame(self.rows(), LEDGER)
 
     def next_run_id(self) -> int:
         """MAX(id)+1 over fully-successful runs (load_sales_history.py:25-27)."""
-        rows = self.read().collect()
         ok = [
             r.id
-            for r in rows
+            for r in self.rows()
             if r.pipeline_status == SUCCESSFUL and r.validation_status == SUCCESSFUL
         ]
         return (max(ok) if ok else 0) + 1
@@ -73,20 +82,21 @@ class RunLedger:
     def previous_cutoff(self, run_id: int) -> datetime | None:
         """current_cutoff of run (run_id - 1); None = first run = full load
         (load_sales_history.py:39-48)."""
-        rows = self.read().where(f"id = {int(run_id) - 1}").collect()
-        return rows[0].current_cutoff if rows else None
+        return next(
+            (r.current_cutoff for r in self.rows() if r.id == int(run_id) - 1), None
+        )
 
     # -- mutations --------------------------------------------------------
 
     def purge_failed(self, from_id: int) -> None:
         """M3/P8 — DELETE WHERE id >= from_id: erase traces of failed runs
         so a restart is idempotent (load_sales_history.py:30-31)."""
-        self._overwrite(self.read().where(f"id < {int(from_id)}"))
+        self._delete_from(int(from_id))
 
     def start_run(self, run_id: int, now: datetime, previous_cutoff: datetime | None,
                   current_cutoff: datetime) -> None:
         """M1 — append the RUNNING row (load_sales_history.py:63-65)."""
-        row = Row(
+        self._insert(Row(
             id=run_id,
             exec_start=now,
             exec_finish=None,
@@ -96,12 +106,7 @@ class RunLedger:
             validation_start=None,
             validation_finish=None,
             validation_status=NOT_STARTED,
-        )
-        df = self.spark.createDataFrame([row], LEDGER)
-        if os.path.isdir(self.path):
-            df.write.mode("append").parquet(self.path)
-        else:
-            df.write.parquet(self.path)
+        ))
 
     def finish_run(self, run_id: int, now: datetime, status: str) -> None:
         """M2 — UPDATE exec_finish/pipeline_status WHERE id = run_id
@@ -115,35 +120,35 @@ class RunLedger:
         """M2 — UPDATE validation verdict (load_sales_history.py:249-251)."""
         self._update(run_id, validation_finish=now, validation_status=status)
 
-    # -- internals --------------------------------------------------------
+    # -- storage primitives -----------------------------------------------
+
+    def _delete_from(self, from_id: int) -> None:
+        self._save([r for r in self.rows() if r.id < from_id])
+
+    def _insert(self, row: Row) -> None:
+        self._save(self.rows() + [row])
 
     def _update(self, run_id: int, **fields) -> None:
-        rows = [r.asDict() for r in self.read().collect()]
-        for r in rows:
-            if r["id"] == run_id:
-                r.update(fields)
-        self._overwrite(self.spark.createDataFrame([Row(**r) for r in rows], LEDGER))
+        self._save([
+            Row(**{**r.asDict(), **fields}) if r.id == run_id else r
+            for r in self.rows()
+        ])
 
-    def _overwrite(self, df) -> None:
-        tmp = self.path + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
+    def _save(self, rows: list[Row]) -> None:
+        LocalFS().set_pointer(self.path, json.dumps([
+            {k: v.isoformat() if isinstance(v, datetime) else v
+             for k, v in r.asDict().items()}
+            for r in rows
+        ]))
 
 
 class JdbcRunLedger(RunLedger):
-    """The ledger where the reference actually keeps it: a lineage table
-    in the SQL database (`Sales_History_Lineage`), mutated with REAL
-    per-row SQL — INSERT (M1), UPDATE ... WHERE id (M2), DELETE WHERE
-    id >= n (M3/P8), scalar cutoff lookup (S11) — instead of the parquet
-    read-modify-overwrite. Same public API; ``run_pipeline_1`` takes
-    either.
-
-    Control-plane statements go through a raw java.sql connection (one
-    row per statement; Spark's writer only does the initial INSERT so
-    the table is created with proper VARCHAR columns). Timestamps are
-    passed as JDBC timestamp literals in UTC-naive form, matching the
+    """The ledger where the reference keeps it: the lineage table
+    `Sales_History_Lineage` in the SQL database. Only the storage
+    primitives differ — per-row INSERT (M1), UPDATE ... WHERE id (M2) and
+    DELETE WHERE id >= n (M3/P8) over a raw java.sql connection; Spark's
+    writer does the first INSERT so the table gets VARCHAR status
+    columns. Timestamps are UTC-naive JDBC literals, matching the
     session timezone the engine pins.
     """
 
@@ -183,6 +188,9 @@ class JdbcRunLedger(RunLedger):
     def _ts(dt: datetime) -> str:
         return "TIMESTAMP('" + dt.strftime("%Y-%m-%d %H:%M:%S") + "')"
 
+    def rows(self) -> list[Row]:
+        return self.read().collect()
+
     def read(self):
         from ..sources.jdbc import read_jdbc
 
@@ -193,27 +201,13 @@ class JdbcRunLedger(RunLedger):
             *[df[f.name].cast(f.dataType).alias(f.name) for f in LEDGER.fields]
         )
 
-    def purge_failed(self, from_id: int) -> None:
+    def _delete_from(self, from_id: int) -> None:
         if self._exists():
-            self._execute(
-                f'DELETE FROM {self.TABLE} WHERE "id" >= {int(from_id)}'
-            )
+            self._execute(f'DELETE FROM {self.TABLE} WHERE "id" >= {from_id}')
 
-    def start_run(self, run_id: int, now: datetime, previous_cutoff: datetime | None,
-                  current_cutoff: datetime) -> None:
+    def _insert(self, row: Row) -> None:
         from ..sources.jdbc import write_jdbc
 
-        row = Row(
-            id=run_id,
-            exec_start=now,
-            exec_finish=None,
-            previous_cutoff=previous_cutoff,
-            current_cutoff=current_cutoff,
-            pipeline_status=RUNNING,
-            validation_start=None,
-            validation_finish=None,
-            validation_status=NOT_STARTED,
-        )
         write_jdbc(
             self.spark.createDataFrame([row], LEDGER),
             self.cfg,

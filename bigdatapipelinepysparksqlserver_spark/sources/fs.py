@@ -12,7 +12,8 @@ Atomicity contract
 * ``set_pointer`` — **REQUIRED atomic** (all-or-nothing visibility): a
   concurrent ``read_pointer`` must observe either the previous content
   or the new content, never a missing, empty, or partial pointer. This
-  is the ONLY operation the no-dirty-read guarantee rests on.
+  is the ONLY operation the no-dirty-read guarantee rests on. The run
+  ledger (``plans/ledger.py``) is one ``set_pointer`` document too.
 
   - Local/POSIX (and HDFS): write-temp + fsync + ``rename`` — POSIX
     rename replaces the target atomically.

@@ -114,10 +114,9 @@ def one_scale(spark, root: str, n_rows: int, snapshot: bool = False) -> dict:
         src.read("sales"), src.read("clients"), src.read("products"),
         src.read("removed"), lake,
     )
-    led = RunLedger(spark, os.path.join(root, "ledger"))
     t0 = time.time()
     parts = loader.changed_partition_list(
-        led.previous_cutoff(led.next_run_id()), T2
+        ledger.previous_cutoff(ledger.next_run_id()), T2
     )
     detect_wall = time.time() - t0
 
@@ -143,10 +142,9 @@ def one_scale(spark, root: str, n_rows: int, snapshot: bool = False) -> dict:
         src.read("sales"), src.read("clients"), src.read("products"),
         src.read("removed"), lake,
     )
-    led = RunLedger(spark, os.path.join(root, "ledger"))
     t3 = T2 + timedelta(hours=12)
     inval_parts = loader.changed_partition_list(
-        led.previous_cutoff(led.next_run_id()), t3
+        ledger.previous_cutoff(ledger.next_run_id()), t3
     )
     t0 = time.time()
     rep3 = run_pipeline_1(spark, src, lake, ledger, now=t3)
